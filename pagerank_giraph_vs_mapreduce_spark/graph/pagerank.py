@@ -25,23 +25,29 @@ Execution shape (the whole point of the Spark design):
   and one global aggregate returning (Σ|Δ|, dangling mass, Σpr) in a single
   pass — replacing the reference's three fixed-point Hadoop counters
   (MR/PageRankDriver.java:195-216) and Giraph DoubleSumAggregators.
-- eager ``localCheckpoint`` EVERY superstep truncates lineage (the Spark
+- a ``localCheckpoint`` EVERY superstep truncates lineage (the Spark
   analog of the reference's iteration-dir GC, MR/PageRankDriver.java:177-185).
   This is load-bearing: each superstep references the previous ranks twice
   (scatter join + update join), so without truncation the logical plan —
   and Catalyst's analysis time — doubles per iteration (measured: 1.7s →
-  15s/iter by iteration 5 on a 4-vertex graph). The checkpoint materializes
-  the new ranks, which we need anyway for the stats aggregate; superseded
-  checkpoint RDDs are unpersisted by Spark's ContextCleaner once the driver
-  drops its reference.
+  15s/iter by iteration 5 on a 4-vertex graph). The checkpoint is LAZY: it
+  cuts the plan at once, and the stats aggregate materializes the new
+  ranks in the same action; only ``phase_timing`` makes it eager, to time
+  compute and stats apart. Superseded checkpoint RDDs are unpersisted by
+  Spark's ContextCleaner once the driver drops its reference.
+- uniform, personalized and weighted PageRank run the SAME superstep loop
+  (``_run_supersteps``, the analog of Giraph's single ``compute()``,
+  GI/PageRankVertex.java:21-60); each entry point supplies only its reset
+  vector, its per-edge share and its graph build.
 """
 
 from __future__ import annotations
 
 import time
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -124,10 +130,14 @@ def latest_checkpoint(spark, checkpoint_dir: str):
 
 
 def scatter_gather(
-    links: DataFrame, ranks: DataFrame, hub_ids: list[int] | None = None
+    links: DataFrame,
+    ranks: DataFrame,
+    hub_ids: list[int] | None = None,
+    share: Column | None = None,
 ) -> DataFrame:
-    """One J1/C2/A1 superstep message pass: scatter pr/outdeg along the
-    cached links, gather by dst. ``hub_ids`` (hot out-degree sources,
+    """One J1/C2/A1 superstep message pass: scatter pr/outdeg (or the
+    given per-edge ``share``, e.g. pr * w / wsum for weighted PageRank)
+    along the cached links, gather by dst. ``hub_ids`` (hot out-degree sources,
     precomputed once per graph) routes the hub edge mass through a
     BROADCAST join of just those sources' ranks — the hub rows never
     shuffle and never pile one join partition onto one task.
@@ -157,9 +167,10 @@ def scatter_gather(
     else:
         ranks_src = ranks.select(F.col("id").alias("src"), "pr")
         join_keys = "src"
+    if share is None:
+        share = F.col("pr") / F.col("outdeg")
     contrib = lambda df: df.select(  # noqa: E731
-        F.col("dst").alias("id"),
-        (F.col("pr") / F.col("outdeg")).alias("contrib"),
+        F.col("dst").alias("id"), share.alias("contrib")
     )
     if hub_ids:
         hot = F.col("src").isin(hub_ids)
@@ -238,19 +249,68 @@ def pagerank(
     free (dangling mass is recomputed from the ranks themselves), so a
     resumed run continues bit-identically.
     """
+    return _run_supersteps(
+        edges,
+        graph,
+        damping,
+        max_iter,
+        tol,
+        min_iter,
+        initial_ranks=initial_ranks,
+        phase_timing=phase_timing,
+        checkpoint_dir=checkpoint_dir,
+        checkpoint_every=checkpoint_every,
+        hub_split_outdeg=hub_split_outdeg,
+    )
+
+
+def _empty(spark, n: int = 0) -> PageRankResult:
+    return PageRankResult(
+        spark.createDataFrame([], "id bigint, pr double"), n, 0, True, []
+    )
+
+
+def _run_supersteps(
+    edges: DataFrame,
+    graph: GraphTables | None,
+    damping: float,
+    max_iter: int,
+    tol: float,
+    min_iter: int,
+    build: Callable[[DataFrame], GraphTables] = build_graph,
+    reset: Column | None = None,
+    share: Column | None = None,
+    initial_ranks: DataFrame | None = None,
+    phase_timing: bool = False,
+    checkpoint_dir: str | None = None,
+    checkpoint_every: int = 10,
+    hub_split_outdeg: int | None | str = None,
+) -> PageRankResult:
+    """The one superstep loop behind every single-vector PageRank.
+
+    ``graph`` (or ``build(edges)`` when it is None, unpersisted at the end) is
+    the cached graph; ``reset`` the per-vertex reset weight, a column over
+    ``id`` (None = uniform 1/N); ``share`` the per-edge message passed to
+    ``scatter_gather`` (None = pr/outdeg). The other arguments are
+    ``pagerank``'s. Mass x spreads over the reset vector as ``x/N`` per
+    vertex, or ``x * reset``, so the update is written once:
+    ``spread(1-d) + d*(contrib + spread(dangling_sum))``."""
     if checkpoint_dir is not None and checkpoint_every < 1:
         raise ValueError(
             f"checkpoint_every must be >= 1, got {checkpoint_every}"
         )
+    spark = edges.sparkSession
     t_setup = time.monotonic()
     own_graph = graph is None
-    g = graph or build_graph(edges)
+    g = graph or build(edges)
     n = g.n_vertices
     if n == 0:
-        empty = edges.sparkSession.createDataFrame([], "id bigint, pr double")
-        return PageRankResult(empty, 0, 0, True, [])
+        if own_graph:
+            g.unpersist()
+        return _empty(spark)
 
-    base = (1.0 - damping) / n
+    def spread(x: float) -> Column:
+        return F.lit(x / n) if reset is None else F.lit(x) * F.col("reset")
 
     # ranks carries a static `dangling` flag so the per-iteration global
     # aggregate gets Σ|Δ|, dangling mass and Σpr in ONE pass (A4+A5+A6).
@@ -258,27 +318,23 @@ def pagerank(
     # `part` label so the scatter join can run on (part, src) against
     # the part-distributed links cache — see scatter_gather.
     placed = g.parts is not None
-    state_cols = ["id", "pr", "dangling"] + (["part"] if placed else [])
     out_src = g.links.select("src").distinct()
-    base_state = g.vertices.join(out_src, g.vertices.id == out_src.src, "left")
+    state = g.vertices.join(out_src, g.vertices.id == out_src.src, "left").select(
+        "id",
+        F.col("src").isNull().alias("dangling"),
+        *([] if reset is None else [reset.alias("reset")]),
+    )
     if placed:
-        base_state = base_state.join(g.parts, "id")
-    if initial_ranks is None:
-        init_pr = F.lit(1.0 / n)
-        state = base_state
-    else:
-        state = base_state.join(
+        state = state.join(g.parts, "id")
+    static_cols = state.columns
+    init_pr = spread(1.0)
+    if initial_ranks is not None:
+        state = state.join(
             initial_ranks.select("id", F.col("pr").alias("pr0")), "id", "left"
         )
-        init_pr = F.coalesce(F.col("pr0"), F.lit(1.0 / n))
-    ranks = (
-        state.select(
-            "id",
-            init_pr.alias("pr"),
-            F.col("src").isNull().alias("dangling"),
-            *(["part"] if placed else []),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        init_pr = F.coalesce(F.col("pr0"), init_pr)
+    ranks = state.select(*static_cols, init_pr.alias("pr")).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     first = ranks.agg(
         F.sum(F.when(F.col("dangling"), F.col("pr")).otherwise(0.0)).alias("dsum")
@@ -291,9 +347,7 @@ def pagerank(
     # join every superstep (see scatter_gather).
     hub_ids: list[int] = []
     if hub_split_outdeg == "auto":
-        shuffle_parts = int(
-            edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
+        shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
         hub_split_outdeg = max(
             HUB_AUTO_FLOOR, g.n_edges // max(shuffle_parts, 1)
         )
@@ -319,7 +373,6 @@ def pagerank(
     # graph partition is balance-guarded by construction). Scoped to the
     # iteration loop and restored after, so no other query's planning
     # changes.
-    spark = edges.sparkSession
     _copart_key = "spark.sql.requireAllClusterKeysForCoPartition"
     _copart_prev = spark.conf.get(_copart_key, "true")
     if placed:
@@ -330,26 +383,19 @@ def pagerank(
             # J1/C2 scatter + A1 gather: links is cached pre-partitioned by src,
             # so only the V-row ranks side shuffles here; hub sources (if a
             # cap was given) scatter via broadcast instead.
-            msgs = scatter_gather(g.links, ranks, hub_ids)
+            msgs = scatter_gather(g.links, ranks, hub_ids, share)
             # C1 update with same-iteration dangling redistribution.
             new = (
-                ranks.select(
-                    "id",
-                    "dangling",
-                    F.col("pr").alias("pr_old"),
-                    *(["part"] if placed else []),
-                )
+                ranks.withColumnRenamed("pr", "pr_old")
                 .join(msgs, "id", "left")
                 .select(
-                    "id",
-                    "dangling",
+                    *static_cols,
                     "pr_old",
                     (
-                        F.lit(base)
+                        spread(1.0 - damping)
                         + F.lit(damping)
-                        * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.lit(dangling_sum / n))
+                        * (F.coalesce(F.col("contrib"), F.lit(0.0)) + spread(dangling_sum))
                     ).alias("pr"),
-                    *(["part"] if placed else []),
                 )
             )
             # Lazy localCheckpoint truncates the logical plan immediately (the
@@ -369,7 +415,7 @@ def pagerank(
             t_stats = time.monotonic()
 
             ranks.unpersist()
-            ranks = new.select(*state_cols)
+            ranks = new.select(*static_cols, "pr")
             dangling_sum = float(stats["dsum"] or 0.0)
             avg_diff = float(stats["diff"] or 0.0) / n
             iterations = i + 1
@@ -417,8 +463,6 @@ def pagerank(
         build_seconds=build_seconds,
         hub_ids=hub_ids,
     )
-
-
 def personalized_pagerank(
     edges: DataFrame,
     sources: list[int],
@@ -446,92 +490,20 @@ def personalized_pagerank(
     contribute no mass (their reset weight is simply never materialized),
     keeping results well-defined on any input.
     """
-    own_graph = graph is None
-    g = graph or build_graph(edges)
-    n = g.n_vertices
-    if n == 0 or not sources:
-        empty = edges.sparkSession.createDataFrame([], "id bigint, pr double")
-        return PageRankResult(empty, n, 0, True, [])
-    w = 1.0 / len(sources)
-    src_ids = [int(s) for s in sources]
-
-    out_src = g.links.select("src").distinct()
-    reset = F.when(F.col("id").isin(src_ids), F.lit(w)).otherwise(F.lit(0.0))
-    ranks = (
-        g.vertices.join(out_src, g.vertices.id == out_src.src, "left")
-        .select(
-            "id",
-            reset.alias("reset"),
-            reset.alias("pr"),
-            F.col("src").isNull().alias("dangling"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # Repeated ids count once: v must sum to 1 or Σpr leaks mass.
+    src_ids = sorted({int(s) for s in sources})
+    if not src_ids:
+        return _empty(edges.sparkSession, graph.n_vertices if graph else 0)
+    w = 1.0 / len(src_ids)
+    return _run_supersteps(
+        edges,
+        graph,
+        damping,
+        max_iter,
+        tol,
+        min_iter,
+        reset=F.when(F.col("id").isin(src_ids), F.lit(w)).otherwise(F.lit(0.0)),
     )
-    first = ranks.agg(
-        F.sum(F.when(F.col("dangling"), F.col("pr")).otherwise(0.0)).alias("dsum")
-    ).first()
-    dangling_sum = float(first["dsum"] or 0.0)
-
-    history: list[IterationStats] = []
-    converged = False
-    iterations = 0
-    for i in range(max_iter):
-        t0 = time.monotonic()
-        msgs = (
-            g.links.join(ranks.select(F.col("id").alias("src"), "pr"), "src")
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("pr") / F.col("outdeg")).alias("contrib"),
-            )
-            .groupBy("id")
-            .agg(F.sum("contrib").alias("contrib"))
-        )
-        new = (
-            ranks.select("id", "reset", "dangling", F.col("pr").alias("pr_old"))
-            .join(msgs, "id", "left")
-            .select(
-                "id",
-                "reset",
-                "dangling",
-                "pr_old",
-                (
-                    F.lit(1.0 - damping) * F.col("reset")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + F.lit(dangling_sum) * F.col("reset")
-                    )
-                ).alias("pr"),
-            )
-        )
-        new = new.localCheckpoint(eager=False)
-        stats = new.agg(
-            F.sum(F.abs(F.col("pr") - F.col("pr_old"))).alias("diff"),
-            F.sum(F.when(F.col("dangling"), F.col("pr")).otherwise(0.0)).alias("dsum"),
-            F.sum("pr").alias("total"),
-        ).first()
-        ranks.unpersist()
-        ranks = new.select("id", "reset", "pr", "dangling")
-        dangling_sum = float(stats["dsum"] or 0.0)
-        avg_diff = float(stats["diff"] or 0.0) / n
-        iterations = i + 1
-        history.append(
-            IterationStats(
-                iteration=iterations,
-                avg_diff=avg_diff,
-                dangling_sum=dangling_sum,
-                total_pr=float(stats["total"] or 0.0),
-                seconds=time.monotonic() - t0,
-            )
-        )
-        if iterations >= min_iter and avg_diff <= tol:
-            converged = True
-            break
-
-    result = ranks.select("id", "pr")
-    if own_graph:
-        g.unpersist()
-    return PageRankResult(result, n, iterations, converged, history)
 
 
 def personalized_pagerank_multi(
@@ -638,104 +610,44 @@ def pagerank_weighted(
     and only V-row rank tables move per superstep; one driver action per
     superstep returns (Σ|Δ|, dangling mass, Σpr); lazy localCheckpoint
     truncates lineage."""
-    w = F.col(weight_col)
-    wedges = edges.select("src", "dst", w.cast("double").alias("w"))
-    # ONE E-row shuffle for the build: the E rows move once
-    # (repartition("src")); the per-src weight sums arrive PARTIAL-
-    # aggregated through their own V-row exchange on the same key; and
-    # the merge join runs exchange-free on the shared hash(src) layout,
-    # leaving the cache SORTED by src. The previous build paid the
-    # join's E-row exchange, then re-shuffled the joined E rows AGAIN
-    # through repartition("src") — and at cluster scale its V-row
-    # broadcast of wdeg is a driver-memory hazard the co-partitioned
-    # merge join does not have (guide §2.4/§3.1).
+    return _run_supersteps(
+        edges,
+        None,
+        damping,
+        max_iter,
+        tol,
+        min_iter,
+        build=lambda e: _weighted_graph(e, weight_col),
+        share=F.col("pr") * F.col("w") / F.col("wsum"),
+    )
+
+
+def _weighted_graph(edges: DataFrame, weight_col: str) -> GraphTables:
+    """``pagerank_weighted``'s build: links(src, dst, w, wsum), where wsum
+    is the src's total out-weight, plus the cached vertex universe.
+
+    ONE E-row shuffle: the E rows move once (repartition("src")); the
+    per-src weight sums arrive PARTIAL-aggregated through their own V-row
+    exchange on the same key; and the merge join runs exchange-free on
+    the shared hash(src) layout, leaving the cache SORTED by src. Joining
+    first would pay the join's E-row exchange and then re-shuffle the
+    joined E rows through repartition("src"); and a V-row broadcast of
+    wdeg is, at cluster scale, a driver-memory hazard the co-partitioned
+    merge join does not have (guide §2.4/§3.1)."""
+    wedges = edges.select("src", "dst", F.col(weight_col).cast("double").alias("w"))
+    # Vertex universe first, as in build_graph: its aggregate runs while
+    # storage memory is still empty.
+    vertices = (
+        wedges.select(F.col("src").alias("id"))
+        .union(wedges.select(F.col("dst").alias("id")))
+        .distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    n_vertices = vertices.count()
     wdeg = wedges.groupBy("src").agg(F.sum("w").alias("wsum"))
     links = (
         wedges.repartition("src")
         .join(wdeg.hint("merge"), "src")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    verts = (
-        wedges.select(F.col("src").alias("id"))
-        .union(wedges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    n = verts.count()
-    if n == 0:
-        empty = edges.sparkSession.createDataFrame([], "id bigint, pr double")
-        return PageRankResult(empty, 0, 0, True, [])
-    base = (1.0 - damping) / n
-
-    out_src = links.select("src").distinct()
-    ranks = (
-        verts.join(out_src, verts.id == out_src.src, "left")
-        .select(
-            "id",
-            F.lit(1.0 / n).alias("pr"),
-            F.col("src").isNull().alias("dangling"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    first = ranks.agg(
-        F.sum(F.when(F.col("dangling"), F.col("pr")).otherwise(0.0)).alias("dsum")
-    ).first()
-    dangling_sum = float(first["dsum"] or 0.0)
-
-    history: list[IterationStats] = []
-    converged = False
-    iterations = 0
-    for i in range(max_iter):
-        t0 = time.monotonic()
-        msgs = (
-            links.join(ranks.select(F.col("id").alias("src"), "pr"), "src")
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("pr") * F.col("w") / F.col("wsum")).alias("contrib"),
-            )
-            .groupBy("id")
-            .agg(F.sum("contrib").alias("contrib"))
-        )
-        new = (
-            ranks.select("id", "dangling", F.col("pr").alias("pr_old"))
-            .join(msgs, "id", "left")
-            .select(
-                "id",
-                "dangling",
-                "pr_old",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + F.lit(dangling_sum / n)
-                    )
-                ).alias("pr"),
-            )
-        )
-        new = new.localCheckpoint(eager=False)
-        stats = new.agg(
-            F.sum(F.abs(F.col("pr") - F.col("pr_old"))).alias("diff"),
-            F.sum(F.when(F.col("dangling"), F.col("pr")).otherwise(0.0)).alias("dsum"),
-            F.sum("pr").alias("total"),
-        ).first()
-        ranks.unpersist()
-        ranks = new.select("id", "pr", "dangling")
-        dangling_sum = float(stats["dsum"] or 0.0)
-        avg_diff = float(stats["diff"] or 0.0) / n
-        iterations = i + 1
-        history.append(
-            IterationStats(
-                iteration=iterations,
-                avg_diff=avg_diff,
-                dangling_sum=dangling_sum,
-                total_pr=float(stats["total"] or 0.0),
-                seconds=time.monotonic() - t0,
-            )
-        )
-        if iterations >= min_iter and avg_diff <= tol:
-            converged = True
-            break
-
-    result = ranks.select("id", "pr")
-    links.unpersist()
-    return PageRankResult(result, n, iterations, converged, history)
+    return GraphTables(vertices, links, n_vertices, links.count())

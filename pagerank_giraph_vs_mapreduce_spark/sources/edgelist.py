@@ -39,11 +39,13 @@ def parse_edgelist(lines: DataFrame, observation: Observation | None = None) -> 
     )
     return (
         tokens.select(
-            F.col("t").getItem(0).try_cast("bigint").alias("src"),
-            F.col("t").getItem(1).try_cast("bigint").alias("dst"),
+            F.get("t", 0).try_cast("bigint").alias("src"),
+            F.get("t", 1).try_cast("bigint").alias("dst"),
         )
-        # try_cast: non-numeric tokens become NULL and are dropped
-        # (reference: NumberFormatException swallowed, PageRankDriver.java:362-371)
+        # get (not getItem, which raises under ANSI mode) yields NULL for a
+        # missing token, and try_cast NULL for a non-numeric one; both rows
+        # are dropped (reference: NumberFormatException swallowed,
+        # PageRankDriver.java:362-371)
         .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
     )
 

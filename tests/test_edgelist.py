@@ -21,6 +21,7 @@ SNAP_TEXT = """\
 3   4
 bogus line here
 5\tnotanumber
+12345
 2\t1
 """
 
@@ -34,7 +35,8 @@ def write_snap(tmp_path):
 def test_parse_drops_comments_blanks_malformed(spark, tmp_path):
     edges = read_edgelist(spark, write_snap(tmp_path)).collect()
     pairs = sorted((r["src"], r["dst"]) for r in edges)
-    # dup edge 2→1 survives parsing (dedup happens at graph build, A2)
+    # dup edge 2→1 survives parsing (dedup happens at graph build, A2);
+    # the one-token line 12345 is dropped, not an ANSI index error
     assert pairs == [(1, 2), (2, 1), (2, 1), (3, 4)]
 
 
@@ -43,7 +45,7 @@ def test_observe_metrics(spark, tmp_path):
     lines = spark.read.text(write_snap(tmp_path))
     parse_edgelist(lines, observation=obs).collect()
     got = obs.get
-    assert got["lines_total"] == 9
+    assert got["lines_total"] == 10
     assert got["lines_comment"] == 2
     assert got["lines_blank"] == 1
 

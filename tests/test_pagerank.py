@@ -132,6 +132,32 @@ def test_weighted_pagerank_uniform_weights_match_unweighted(spark):
         assert weighted[k] == pytest.approx(plain[k], abs=1e-12)
 
 
+def test_every_entry_point_reports_build_and_phase_times(spark):
+    """The shared superstep loop gives all three kernels a real setup
+    time and the plan/compute/stats split of every superstep."""
+    from pyspark.sql import functions as F
+
+    from pagerank_giraph_vs_mapreduce_spark.graph.pagerank import (
+        pagerank_weighted,
+        personalized_pagerank,
+    )
+
+    edges = make_edges(spark, [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1)])
+    wedges = edges.select("src", "dst", F.lit(2.0).alias("w"))
+    solve = dict(max_iter=2, tol=-1.0, min_iter=0)
+    results = {
+        "pagerank": pagerank(edges, **solve),
+        "personalized": personalized_pagerank(edges, [1, 4], **solve),
+        "weighted": pagerank_weighted(wedges, **solve),
+    }
+    for name, res in results.items():
+        assert res.build_seconds > 0, name
+        assert len(res.history) == 2, name
+        for h in res.history:
+            assert h.plan_seconds > 0 and h.compute_seconds > 0, name
+            assert h.stats_seconds > 0, name
+
+
 def test_weighted_pagerank_weights_shift_mass(spark):
     """A heavier edge pulls proportionally more rank to its head: with
     1->2 weighted 3x vs 1->3 weighted 1x, vertex 2 outranks vertex 3."""

@@ -69,6 +69,34 @@ def test_ppr_mass_conservation_with_dangling(spark):
     assert got[7] == pytest.approx(0.0, abs=1e-12)
 
 
+def test_ppr_repeated_sources_count_once(spark):
+    """A repeated source id must not shrink the reset vector: sources
+    [0, 0] is the walk of sources [0], and Σpr stays 1."""
+    edges = make_edges(spark, [(0, 1), (1, 2), (2, 0), (0, 2), (3, 0)])
+    solve = dict(max_iter=5, tol=-1.0, min_iter=0)
+    once = {r["id"]: r["pr"] for r in personalized_pagerank(edges, [0], **solve).ranks.collect()}
+    twice = {r["id"]: r["pr"] for r in personalized_pagerank(edges, [0, 0], **solve).ranks.collect()}
+    assert twice == once
+    assert sum(twice.values()) == pytest.approx(1.0, abs=1e-12)
+
+
+def test_ppr_every_vertex_a_source_is_pagerank(spark):
+    """With every vertex a source, the reset vector is uniform 1/N and
+    personalized PageRank is plain PageRank (dangling vertex 4 included)."""
+    from pagerank_giraph_vs_mapreduce_spark.graph.pagerank import pagerank
+
+    edges = make_edges(spark, [(0, 1), (1, 2), (2, 0), (0, 2), (3, 0), (2, 4)])
+    solve = dict(max_iter=5, tol=-1.0, min_iter=0)
+    plain = {r["id"]: r["pr"] for r in pagerank(edges, **solve).ranks.collect()}
+    ppr = {
+        r["id"]: r["pr"]
+        for r in personalized_pagerank(edges, sorted(plain), **solve).ranks.collect()
+    }
+    assert set(ppr) == set(plain)
+    for k in plain:
+        assert ppr[k] == pytest.approx(plain[k], abs=1e-12)
+
+
 def test_ppr_empty_sources_and_empty_graph(spark):
     edges = make_edges(spark, [(0, 1)])
     assert personalized_pagerank(edges, sources=[]).ranks.count() == 0

@@ -141,6 +141,7 @@ def test_placed_pagerank_exact_equal_fewer_shuffle(spark):
     )
     from pagerank_giraph_vs_mapreduce_spark.graph.pagerank import (
         pagerank,
+        personalized_pagerank,
         scatter_gather,
     )
     from pagerank_giraph_vs_mapreduce_spark.graph.placement import (
@@ -171,6 +172,20 @@ def test_placed_pagerank_exact_equal_fewer_shuffle(spark):
     assert set(h) == set(p)
     assert all(f"{h[k]:.10f}" == f"{p[k]:.10f}" for k in h)  # C4 contract
     assert all(abs(h[k] - p[k]) <= 1e-12 * max(abs(h[k]), 1e-30) for k in h)
+
+    # personalized PageRank runs the same loop, so a placed graph gives
+    # it the same ranks at the %.10f contract
+    ppr_h, ppr_p = (
+        {
+            r["id"]: r["pr"]
+            for r in personalized_pagerank(
+                edges, [0, 15], max_iter=3, tol=0.0, min_iter=3, graph=g
+            ).ranks.collect()
+        }
+        for g in (g_hash, g_placed)
+    )
+    assert set(ppr_h) == set(ppr_p) == set(h)
+    assert all(f"{ppr_h[k]:.10f}" == f"{ppr_p[k]:.10f}" for k in ppr_h)
 
     # superstep shuffle A/B on the real scatter+gather plan. ranks0 is
     # checkpoint-backed (the kernel's per-superstep reality) and
